@@ -11,7 +11,10 @@ is the thin binding layer.
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import re
 import sys
 from collections.abc import Callable
 
@@ -41,12 +44,63 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
 
+def correctness_records() -> dict[int, dict[str, dict]]:
+    """Gate round -> its rows, read from the ``CORRECTNESS_r{N}.json``
+    files the gate commits next to this file."""
+    records = {}
+    for path in glob.glob(os.path.join(_HERE, "CORRECTNESS_r*.json")):
+        m = re.search(r"_r(\d+)\.json$", path)
+        if m:
+            with open(path) as f:
+                records[int(m.group(1))] = json.load(f)
+    return records
+
+
+def _green(row: dict) -> bool:
+    if row.get("err") == "no_oracle":  # the gate's rows-only check
+        return (row.get("spark_rows") or 0) > 0
+    return (
+        row.get("err") is None
+        and row.get("rows_match") is True
+        and row.get("schema_match") is True
+        and row.get("hash_match") is not False
+    )
+
+
+def last_green(records: dict[int, dict[str, dict]]) -> dict[str, int]:
+    """Query name -> latest round in ``records`` with a green row."""
+    last: dict[str, int] = {}
+    for rnd, rows in records.items():
+        for name, row in rows.items():
+            if _green(row) and rnd > last.get(name, -1):
+                last[name] = rnd
+    return last
+
+
+def _export_order() -> list[str]:
+    # The gate snapshots only the first 50 exported queries, so the
+    # stalest go first: never-gated (-1), then oldest green round, ties in
+    # registration order.  Each round's records rotate the window.
+    last = last_green(correctness_records())
+    live = [
+        (last.get(name, -1), i, name)
+        for i, (name, spec) in enumerate(Q.REGISTRY.items())
+        if spec.retired is None
+    ]
+    return [name for *_, name in sorted(live)]
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2 / §2.11."""
-    return Q.queries()
+    """Every non-retired registered query, stalest gate row first."""
+    return {name: Q.REGISTRY[name].fn for name in _export_order()}
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL oracle per query; omitted only for
-    genuinely non-SQL-expressible operators (rows-only check)."""
-    return Q.oracle_sql()
+    """DuckDB-runnable ANSI SQL oracle per exported query, in export
+    order; omitted only for genuinely non-SQL-expressible operators
+    (rows-only check)."""
+    return {
+        name: Q.REGISTRY[name].oracle_text()
+        for name in _export_order()
+        if Q.REGISTRY[name].oracle
+    }

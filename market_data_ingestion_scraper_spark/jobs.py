@@ -199,11 +199,11 @@ def run_corpus_ingestion(
     Content-level exactly-once carries over for free: a re-delivered
     batch admits zero rows and therefore appends zero sketch rows.
 
-    Scale shape: the landing scan is line-splittable text; dedup shuffles
-    32-byte hashes (map-side combined), never documents; the keep-set
-    semi-join broadcasts when small.  The hash-group table is persisted
-    because both counters and the keep-join read it — it holds one row
-    per DISTINCT document, the corpus's smallest useful summary."""
+    Scale shape: the landing scan is line-splittable text; the counters
+    come from a groupBy that shuffles 32-byte hashes (map-side combined),
+    persisted because it holds one row per DISTINCT document, the
+    corpus's smallest useful summary.  The gold rows come from one
+    map-side-combined groupBy of the documents by content hash."""
     from .operators.dedup import content_hash_dedup
     from .sources.jsonl import read_jsonl
     from .sources.writer import write_gold
@@ -211,8 +211,15 @@ def run_corpus_ingestion(
     clean, quarantine = read_jsonl(spark, landing_path)
     clean = clean.withColumn("content_hash", _content_hash())
     groups = content_hash_dedup(clean).persist()
-    keeps = groups.select(F.col("keep_doc_id").alias("doc_id"))
-    deduped = clean.join(keeps, "doc_id", "left_semi")
+    # exactly one row per content hash: the lowest doc_id, ties between
+    # copies of that id (a landing delivering a doc twice) broken by the
+    # whole row, so the pick never depends on partitioning
+    order = ["doc_id"] + [c for c in clean.columns if c != "doc_id"]
+    deduped = (
+        clean.groupBy("content_hash")
+        .agg(F.min(F.struct(*order)).alias("_keep"))
+        .select(*[F.col("_keep")[c].alias(c) for c in clean.columns])
+    )
 
     bloom = None
     if incremental and bloom_path is not None:

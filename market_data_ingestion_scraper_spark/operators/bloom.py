@@ -49,6 +49,7 @@ from __future__ import annotations
 
 import json
 import os
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
@@ -345,6 +346,55 @@ def bloom_probe_hashes(
         .applyInPandas(probe, out_schema)
     )
     return tested.unionByName(nulls)
+
+
+def literal_bloom_prober(
+    blooms: DataFrame, max_artifact_bytes: int, what: str
+) -> Callable[[str], bool]:
+    """Plan-literal twin of :func:`bloom_probe_hashes` for stream taggers:
+    collect the bitmaps ONCE into a closure (refused above
+    ``max_artifact_bytes`` — the closure ships with every task) and
+    return ``maybe(h) -> bool``, the same verdict per hex-digest hash
+    (verdict parity is pytest-pinned)."""
+    import hashlib
+
+    brows = blooms.select("shard", "n_bits", "n_hashes", "bitmap").collect()
+    n_shards, n_bits, n_hashes = bloom_params_from_rows(brows)
+    total = sum(len(r["bitmap"]) for r in brows)
+    if total > max_artifact_bytes:
+        raise ValueError(
+            f"{what} bloom artifact is {total} bytes > max_artifact_bytes="
+            f"{max_artifact_bytes}: a plan-literal tagger must stay "
+            "broadcast-sized — raise the cap on bigger executors or use "
+            "the exact batch path"
+        )
+    bitmaps = {
+        int(r["shard"]): np.frombuffer(r["bitmap"], dtype=np.uint8)
+        for r in brows
+    }
+
+    # the portable spec is shard = md5(h)[:8] and pos_j = md5(h ':' j)[:15]
+    # (shard_of / bit_positions).  md5 is a streaming hash, so absorbing h
+    # ONCE and deriving each position via copy()+update(":j") is
+    # bit-for-bit the spec while paying one full hash per gram instead of
+    # n_hashes+1.
+    suffixes = [f":{j}".encode() for j in range(n_hashes)]
+
+    def maybe(h: str) -> bool:
+        base = hashlib.md5(h.encode())
+        shard = int(base.hexdigest()[:8], 16) % n_shards
+        bm = bitmaps.get(shard)
+        if bm is None:
+            return False
+        for suf in suffixes:
+            m = base.copy()
+            m.update(suf)
+            pos = int(m.hexdigest()[:15], 16) % n_bits
+            if not (bm[pos >> 3] >> (pos & 7)) & 1:
+                return False
+        return True
+
+    return maybe
 
 
 def extend_hash_bloom(

@@ -151,10 +151,10 @@ def shingles(
     ``portable=True`` swaps the xxhash64 token hash for
     :func:`portable_token_hash`, making every downstream signature value
     reproducible in the DuckDB oracle; xxhash64 stays the throughput
-    default.  NOTE: this column form pays the token hash per OCCURRENCE —
-    for the md5-based portable hash prefer :func:`minhash_table`'s fused
-    window-lead path, which hashes each distinct token once via the
-    vocabulary dictionary and composes grams positionally."""
+    default.  This column form pays the token hash per OCCURRENCE; it is
+    also the path :func:`minhash_table` takes for both hash flavors,
+    because per-row hashing measured faster than deduplicating tokens
+    through a shuffle (see its docstring)."""
     tok_hash = (
         portable_token_hash
         if portable
@@ -1036,7 +1036,8 @@ def _simhash_from_hash_arrays():
     projection (stream-legal, no shuffle at any scale); only ``_hs``
     crosses the Arrow boundary (~8 B/token), and the bit matrix is
     chunked to ≤ 2^21 tokens (~128 MB) so one wide batch cannot balloon
-    worker memory."""
+    worker memory.  An empty hash array folds to 0 (no bit has a
+    majority); :func:`simhash_table` drops token-less docs before this."""
     import numpy as np
     import pandas as pd
 
@@ -1057,13 +1058,20 @@ def _simhash_from_hash_arrays():
             while end < len(arrs) and (tok == 0 or tok + lens[end] <= budget):
                 tok += lens[end]
                 end += 1
+            ln = lens[start:end]
             flat = np.concatenate(arrs[start:end])
             bits = np.unpackbits(
                 flat.view(np.uint8).reshape(-1, 8), axis=1, bitorder="little"
             )
-            seg = np.cumsum(lens[start:end]) - lens[start:end]
-            cnt = np.add.reduceat(bits, seg, axis=0, dtype=np.int64)
-            maj = (cnt * 2 > lens[start:end, None]).astype(np.uint64)
+            # reduceat gives an empty segment its neighbour's row, so only
+            # non-empty docs get segments; an empty doc has no majority
+            # bit and folds to signature 0
+            nz = ln > 0
+            cnt = np.zeros((end - start, 64), dtype=np.int64)
+            if nz.any():
+                seg = (np.cumsum(ln) - ln)[nz]
+                cnt[nz] = np.add.reduceat(bits, seg, axis=0, dtype=np.int64)
+            maj = (cnt * 2 > ln[:, None]).astype(np.uint64)
             out[start:end] = (maj << shifts).sum(axis=1, dtype=np.uint64)
             start = end
         return pd.Series(out.view(np.int64))

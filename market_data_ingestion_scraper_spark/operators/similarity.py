@@ -212,20 +212,6 @@ def hyperplanes(dim: int = 64, n_planes: int = 12, seed: int = 42) -> list[list[
     return rng.standard_normal((n_planes, dim)).tolist()
 
 
-def lsh_bucket(vec_col: Column, planes: list[list[float]]) -> Column:
-    """Random-hyperplane signature: bit i = sign(v·planeᵢ) → int bucket id.
-    Column form for single-table use; multi-table pipelines use
-    ``bucket_table`` (constant plan size regardless of table count)."""
-    bucket = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        plane = F.array(*[F.lit(float(x)) for x in p])
-        bit = F.when(dot(_dbl(vec_col), plane) >= 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        bucket = bucket.bitwiseOR(F.shiftleft(bit, i))
-    return bucket
-
-
 def bucket_table(
     df: DataFrame,
     id_col: str,

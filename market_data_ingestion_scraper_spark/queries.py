@@ -58,6 +58,10 @@ class QuerySpec:
     #: corpus at a given scale factor.
     oracle: str | Callable[..., str] | None
     doc: str
+    #: Round the query left the gate export; a retired query stays
+    #: registered and pytest-checked, and its carrier (the live query
+    #: whose oracle exercises the same construction) is noted beside it.
+    retired: int | None = None
 
     def oracle_text(self, sf_dir: str = GATE_SF_DIR) -> str | None:
         if self.oracle is None or isinstance(self.oracle, str):
@@ -73,9 +77,14 @@ class QuerySpec:
 REGISTRY: dict[str, QuerySpec] = {}
 
 
-def register(name: str, oracle: str | Callable[[], str] | None, doc: str = ""):
+def register(
+    name: str,
+    oracle: str | Callable[[], str] | None,
+    doc: str = "",
+    retired: int | None = None,
+):
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        REGISTRY[name] = QuerySpec(fn=fn, oracle=oracle, doc=doc)
+        REGISTRY[name] = QuerySpec(fn=fn, oracle=oracle, doc=doc, retired=retired)
         return fn
 
     return deco
@@ -231,6 +240,7 @@ def q_covered(spark: SparkSession, sf: str) -> DataFrame:
     FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
     """,
     doc="Ext-A6 hierarchical rollup in one grouping-sets pass.",
+    retired=9,  # carried by cube_revenue
 )
 def q_rollup(spark: SparkSession, sf: str) -> DataFrame:
     return A.rollup_revenue(_t(spark, sf, "lineitem"))
@@ -311,6 +321,7 @@ def q_percentiles(spark: SparkSession, sf: str) -> DataFrame:
     doc="T1 variant via max_by/arg_max: argmax aggregation instead of a "
     "rank window — one pass, no window state.  Per-brand revenues are "
     "verified tie-free in this data; with ties, compose the ordering key.",
+    retired=15,  # carried by top3_parts_per_brand
 )
 def q_maxby(spark: SparkSession, sf: str) -> DataFrame:
     from .functions import exact_sum, revenue
@@ -387,6 +398,7 @@ def q_topk_group(spark: SparkSession, sf: str) -> DataFrame:
     """,
     doc="§2.8 rank/dense_rank with genuine ties (revenue tiers) — "
     "deterministic under ties, unlike row_number.",
+    retired=16,  # carried by top3_parts_per_brand
 )
 def q_rank_tiers(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql import Window
@@ -541,6 +553,7 @@ def q_union_days(spark: SparkSession, sf: str) -> DataFrame:
     "both 1994 halves) and EXCEPT (first half only) as native Spark "
     "df.intersect/exceptAll-distinct ops — both compile to aggregate + "
     "hash-join plans, no driver-side sets.",
+    retired=10,  # carried by brands_never_shipped_1998
 )
 def q_repeat_vs_lapsed(spark: SparkSession, sf: str) -> DataFrame:
     o = _t(spark, sf, "orders")
@@ -764,6 +777,7 @@ _EN_STOP = "['the','a','of','and','to','in','is','it']"
     GROUP BY term
     """,
     doc="X4 corpus term counts: tokenize → explode → count (map-side combined).",
+    retired=9,  # carried by token_count_histogram and bm25_ranking
 )
 def q_term_freq(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.text import term_frequencies
@@ -850,6 +864,7 @@ def q_text_quality(spark: SparkSession, sf: str) -> DataFrame:
     FROM (SELECT *, greatest(s_de, s_en, s_es, s_fr, s_zh) AS best FROM s)
     """,
     doc="X4 stopword-intersection language ID with alphabetical tie-break.",
+    retired=11,  # carried by source_language_mix
 )
 def q_language_id(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.text import language_id
@@ -957,6 +972,7 @@ def q_html_table_scan(spark: SparkSession, sf: str) -> DataFrame:
     "pages read via a registered format('htmltable') — one task per page, "
     "same parser/guards as the mapInPandas path; three-way differential "
     "(DataSource scan ≡ mapInPandas scan ≡ parquet oracle).",
+    retired=8,  # carried by html_table_scan
 )
 def q_html_table_scan_datasource(spark: SparkSession, sf: str) -> DataFrame:
     import json
@@ -1011,6 +1027,7 @@ def q_stratified_sample(spark: SparkSession, sf: str) -> DataFrame:
     doc="Shuffle-free deterministic ~10% sample via salted-hash prefix "
     "threshold: pure filter, scan-bandwidth-bound at 100 TB, same rows on "
     "every rerun (unlike df.sample, which is partition-order-dependent).",
+    retired=18,  # carried by decontam_holdout_split
 )
 def q_uniform_sample(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.sampling import uniform_hash_sample
@@ -1148,6 +1165,7 @@ def q_doc_chunks(spark: SparkSession, sf: str) -> DataFrame:
     "each document's first token in 512-token context windows, packed "
     "per (lang, hash-shard) stratum — the stratum count, not the language "
     "count, is the parallelism, so it scales with the cluster.",
+    retired=13,  # carried by curriculum_packed_order
 )
 def q_pack_plan(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.chunking import pack_sequences
@@ -1189,6 +1207,7 @@ def q_pack_plan(spark: SparkSession, sf: str) -> DataFrame:
     "5-grams with a (broadcast) eval set — the standard n-gram-overlap "
     "decontamination step; the held-out set here is the deterministic "
     "doc_id%29 slice.",
+    retired=17,  # carried by decontam_holdout_split
 )
 def q_benchmark_decontam(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.decontam import decontaminate
@@ -1291,6 +1310,7 @@ def q_memorization_profile(spark: SparkSession, sf: str) -> DataFrame:
     """,
     doc="Dataset-mixing report: per-source doc/token counts and corpus "
     "shares — the composition table a mixture-reweighting step consumes.",
+    retired=10,  # carried by temperature_mixture
 )
 def q_source_mix(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.mixing import source_mix
@@ -1367,6 +1387,7 @@ def q_quality_funnel(spark: SparkSession, sf: str) -> DataFrame:
     FROM documents GROUP BY text
     """,
     doc="X1 exact dedup: group by content, min-id representative.",
+    retired=9,  # carried by dedup_rate_by_source
 )
 def q_dedup_exact(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.dedup import exact_duplicate_groups
@@ -1382,6 +1403,7 @@ def q_dedup_exact(spark: SparkSession, sf: str) -> DataFrame:
     FROM documents GROUP BY 1
     """,
     doc="X1 content-hash dedup: shuffle 32-byte hashes, not documents.",
+    retired=11,  # carried by dedup_rate_by_source
 )
 def q_dedup_hash(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.dedup import content_hash_dedup
@@ -1458,6 +1480,7 @@ def _minhash_oracle_sql() -> str:
     "oracle-checked end to end: the portable md5-fold token hash makes "
     "all 64 signature values engine-reproducible, so DuckDB rebuilds the "
     "identical signatures, bands, candidates, and estimates.",
+    retired=9,  # carried by minhash_est_calibration
 )
 def q_minhash(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.dedup import lsh_candidate_pairs
@@ -1508,6 +1531,7 @@ _JACCARD_07_SQL = r"""
     doc="X2 LSH candidates verified with exact n-gram Jaccard ≥ 0.7; "
     "oracle is the full all-pairs exact Jaccard in DuckDB, so the gate "
     "also proves the LSH stage misses no true pair on this corpus.",
+    retired=14,  # carried by minhash_est_calibration
 )
 def q_near_dups(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.dedup import near_duplicates
@@ -1528,6 +1552,7 @@ def q_near_dups(spark: SparkSession, sf: str) -> DataFrame:
     "every document with a ≥0.7-Jaccard near-duplicate of smaller id "
     "(keep-lowest-id policy; one anti-join over the ssjoin pair list, "
     "no iteration).",
+    retired=8,  # carried by curation_pipeline
 )
 def q_dedup_survivors(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.dedup import dedup_survivors
@@ -1595,6 +1620,7 @@ def q_near_dup_clusters(spark: SparkSession, sf: str) -> DataFrame:
     doc="X2 exact set-similarity join: inverted-index equi-join on shared "
     "shingles, jaccard from co-occurrence counts — the deterministic "
     "baseline the probabilistic LSH pipeline is measured against.",
+    retired=16,  # carried by minhash_est_calibration
 )
 def q_jaccard_ssjoin(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.dedup import jaccard_similarity_join
@@ -1676,6 +1702,7 @@ def q_simhash(spark: SparkSession, sf: str) -> DataFrame:
     FROM embeddings
     """,
     doc="X5 vector-column profiling: L2 norms via built-in array fold.",
+    retired=8,  # carried by embedding_norm_outliers
 )
 def q_embedding_norms(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.similarity import embedding_norms
@@ -1713,6 +1740,7 @@ _BRUTE_TOPK_SQL = """
     _BRUTE_TOPK_SQL,
     doc="X3 exact cosine top-5 for query vectors vec_id<8; broadcast "
     "queries × corpus, per-query rank window; fold order mirrored in SQL.",
+    retired=9,  # carried by ann_recall_eval and ivf_recall_eval
 )
 def q_cosine_topk(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.similarity import brute_force_topk
@@ -1823,6 +1851,7 @@ def _lsh_topk_oracle() -> str:
     doc="X3 ANN top-k via random-hyperplane LSH bucket equi-join; oracle "
     "reproduces every bucket bit from the shared integer micro-unit "
     "weights, then ranks candidates with the same fold cosine.",
+    retired=10,  # carried by ann_recall_eval
 )
 def q_lsh_topk(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.similarity import lsh_topk
@@ -1957,6 +1986,7 @@ def _ivf_topk_oracle() -> str:
     "unsupervised sample-bounded KMeans fit remains available and is "
     "recall-tested in tests/test_dedup_similarity.py).  Integer cell "
     "scores make assignment parallelism-independent and SQL-reproducible.",
+    retired=10,  # carried by ivf_recall_eval
 )
 def q_ivf_topk(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.similarity import ivf_topk, label_centroid_elements
@@ -2377,6 +2407,7 @@ def q_multimodal(spark: SparkSession, sf: str) -> DataFrame:
     doc="Skew-salted two-stage aggregation (operators/skew.py): the hot-key "
     "spread plan must produce the same answer as the plain one-stage sum — "
     "the oracle IS the plain sum, so the equality is hash-checked.",
+    retired=12,  # carried by pricing_summary
 )
 def q_salted(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.skew import salted_group_sum
@@ -2405,6 +2436,7 @@ def q_salted(spark: SparkSession, sf: str) -> DataFrame:
     "quantities are 2-dp decimals), so the sum is order-independent and "
     "the single final division matches DuckDB's BIGINT arithmetic "
     "bit-for-bit.",
+    retired=16,  # carried by multimodal_features
 )
 def q_grouped_pandas(spark: SparkSession, sf: str) -> DataFrame:
     import pandas as pd
@@ -2461,6 +2493,7 @@ def q_grouped_pandas(spark: SparkSession, sf: str) -> DataFrame:
     "express.  Here they CAN (explode+groupBy is the production path, "
     "see term_frequencies), which is exactly what makes this "
     "oracle-checkable: the DuckDB twin is the relational form.",
+    retired=9,  # carried by bm25_ranking and tfidf_top_terms
 )
 def q_per_doc_term_counts(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql.functions import udtf
@@ -2497,6 +2530,7 @@ def q_per_doc_term_counts(spark: SparkSession, sf: str) -> DataFrame:
     """,
     doc="Data-quality validation: declared metadata vs actual content "
     "(the ingest-side guard layer a training-data pipeline runs first).",
+    retired=11,  # carried by quality_funnel
 )
 def q_validate(spark: SparkSession, sf: str) -> DataFrame:
     d = _t(spark, sf, "documents")
@@ -2519,6 +2553,7 @@ def q_validate(spark: SparkSession, sf: str) -> DataFrame:
     None,  # sketch algorithms (HLL++/GK) differ across engines by design
     doc="X6 100TB-scale profiling: approx distinct + approx quantiles "
     "(single pass, bounded memory; exactness traded for scale).",
+    retired=12,  # carried by sketch_profile_check
 )
 def q_approx_profile(spark: SparkSession, sf: str) -> DataFrame:
     li = _t(spark, sf, "lineitem")
@@ -2741,6 +2776,7 @@ _GOPHER_KEEP_SQL = """CAST(n_words BETWEEN 50 AND 100000 AS INT)
     doc="Gopher-rule quality gate (Rae et al. 2021 §A1.1 subset): word "
     "count / mean word length / alpha fraction / stopword probe, one int "
     "flag per rule plus composite keep.  Per-row projection, no shuffle.",
+    retired=11,  # carried by curation_pipeline
 )
 def q_gopher_rules(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.text import gopher_rules
@@ -2824,6 +2860,7 @@ def q_label_centroids(spark: SparkSession, sf: str) -> DataFrame:
     doc="Per-document token counting: whitespace/punct word count plus a "
     "BPE-rate proxy (1 token per word + 1 per 4 chars of long words). "
     "Per-row projection, no shuffle.",
+    retired=8,  # carried by token_count_histogram
 )
 def q_token_counts(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.text import token_counts
@@ -2854,6 +2891,7 @@ def q_token_counts(spark: SparkSession, sf: str) -> DataFrame:
     "log-probability under the corpus unigram distribution.  Per-term "
     "log-probs snap to int64 micro-units before the per-doc sum, so the "
     "result is partitioning-independent.",
+    retired=11,  # carried by perplexity_buckets
 )
 def q_unigram_logprob(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.text import unigram_logprob
@@ -2921,6 +2959,7 @@ def q_paragraph_dup_stats(spark: SparkSession, sf: str) -> DataFrame:
     doc="Per-document cross-doc duplicated-paragraph ratio: paragraphs "
     "whose hash appears in more than one distinct document (boilerplate "
     "detection).  Only (id, idx, hash) triples ever shuffle.",
+    retired=8,  # carried by paragraph_dup_stats
 )
 def q_dup_paragraph_docs(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.dedup import dup_paragraph_docs
@@ -2963,6 +3002,7 @@ def q_dup_paragraph_docs(spark: SparkSession, sf: str) -> DataFrame:
     "prototype with the largest dot product, exact int64 micro-unit "
     "arithmetic.  Prototype table broadcasts; corpus vectors never "
     "shuffle whole.",
+    retired=10,  # carried by semdedup_drop
 )
 def q_centroid_assign(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.similarity import centroid_assign
@@ -3102,6 +3142,7 @@ def q_bigram_merges(spark: SparkSession, sf: str) -> DataFrame:
     "paragraphs already seen earlier in the same document, keep "
     "first-occurrence order, hash the cleaned text.  Per-row projection, "
     "zero shuffle.",
+    retired=15,  # carried by paragraph_dup_stats
 )
 def q_collapse_paras(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.dedup import collapse_repeated_paragraphs
@@ -3181,6 +3222,7 @@ def q_curation_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     doc="Per-document lexical diversity: type-token ratio + hapax ratio "
     "(the quality signals template spam fails).  Per-row projection, "
     "no shuffle.",
+    retired=15,  # carried by text_quality
 )
 def q_lexical_diversity(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.text import lexical_diversity
@@ -3242,6 +3284,7 @@ def q_zipf_profile(spark: SparkSession, sf: str) -> DataFrame:
     "appear in more than one source split (the contamination a holdout "
     "split must not have).  One hash-keyed groupBy; 16-byte keys on the "
     "shuffle, never text.",
+    retired=17,  # carried by decontam_holdout_split
 )
 def q_split_leakage(spark: SparkSession, sf: str) -> DataFrame:
     docs = _t(spark, sf, "documents")
@@ -3331,6 +3374,7 @@ def q_norm_outliers(spark: SparkSession, sf: str) -> DataFrame:
     doc="Packing utilization per (lang, shard) stratum: windows consumed "
     "and fill rate — the batch-economics companion of pack_plan (tail "
     "waste vs parallelism trade).  One map-side-combined aggregate.",
+    retired=10,  # carried by curriculum_packed_order
 )
 def q_pack_efficiency(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.chunking import pack_efficiency
@@ -3424,6 +3468,7 @@ def q_token_count_histogram(spark: SparkSession, sf: str) -> DataFrame:
     ">= 3 distinct 8-token grams — verbatim shared spans that "
     "whole-document Jaccard misses.  Inverted-index equi-join; at n=8 "
     "gram doc-frequencies are near 1, so cost ~ corpus size.",
+    retired=14,  # carried by duplicated_span_stats
 )
 def q_gram_overlap(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.dedup import shared_gram_pairs
@@ -3601,6 +3646,7 @@ def q_semdedup(spark: SparkSession, sf: str) -> DataFrame:
     doc="Corpus length profile: floor(log2(chars)) buckets via integer "
     "binary-representation length (engine-exact at power-of-two "
     "boundaries, unlike float log2), with per-bucket share.",
+    retired=9,  # carried by token_count_histogram
 )
 def q_length_histogram(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.text import length_histogram
@@ -3761,6 +3807,7 @@ def _label_pq_quantizer(
     "memory-bound ANN index; scoring sums m broadcast table lookups and "
     "never touches a raw corpus vector.  All arithmetic is int64 "
     "micro²-units — the oracle reproduces encode and ADC bit-for-bit.",
+    retired=13,  # carried by ivfpq_topk_adc
 )
 def q_pq_topk(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.similarity import pq_topk
@@ -4478,6 +4525,7 @@ _LR_DOT = (
     "replays featurize -> train-step -> score bit-for-bit.  Multi-step "
     "driver training (fit_lr) and literal-weight serving are "
     "pytest-pinned (test_classifier.py).",
+    retired=18,  # carried by quality_ensemble
 )
 def q_quality_classifier_scores(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.classifier import (
@@ -4927,6 +4975,7 @@ def q_dsir_select(spark: SparkSession, sf: str) -> DataFrame:
     "fill).  Budgets derive via exact integer-ppm half-up DIV "
     "identities; the u < frac compare runs on identically-derived "
     "doubles, so the selected set is bit-stable across engines.",
+    retired=16,  # carried by dsir_select
 )
 def q_mixture_budget_fill(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.mixing import hash_budget_fill
@@ -6191,17 +6240,13 @@ def q_instruction_pairs(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def preference_pairs_oracle() -> str:
-    """STAGED oracle for X38 `preference_pairs` — verified green at
-    sf0.001 + sf0.01 at r17 (when the operator shipped beyond the gate)
-    and re-verified continuously by
-    ``test_instruct.test_preference_pairs_staged_oracle`` so it cannot
-    rot before the r18 rotation registers it (with a retirement slot
-    from the r17-green window).  Nests the X35 voter CTEs VERBATIM via
-    the shared constants (the quality_ensemble precedent: the votes the
-    selection rides cannot drift from the gated ensemble), then the X37
-    window discipline extended to triples, the tie-drop policy as the
-    ``va.votes <> vb.votes`` filter, and the capped PSM-style
-    rendering."""
+    """Oracle for X38 `preference_pairs`, also checked directly by
+    ``test_instruct.test_preference_pairs_staged_oracle``.  Nests the X35
+    voter CTEs VERBATIM via the shared constants (the quality_ensemble
+    precedent: the votes the selection rides cannot drift from the gated
+    ensemble), then the X37 window discipline extended to triples, the
+    tie-drop policy as the ``va.votes <> vb.votes`` filter, and the capped
+    PSM-style rendering."""
     from .operators.instruct import INSTRUCTION_TEMPLATES
 
     tmpl = "['" + "','".join(INSTRUCTION_TEMPLATES) + "']"
@@ -6405,554 +6450,3 @@ def q_best_of_n(spark: SparkSession, sf: str) -> DataFrame:
 
     return best_of_n_examples(_t(spark, sf, "documents"))
 
-
-# The external correctness gate snapshots the FIRST 50 entries of the
-# queries() dict (observed r01/r02: entries past position 50 get no
-# correctness row at all).  Registration order in this file is topical, so
-# the exported dict is re-ordered explicitly: queries that still need a
-# first (or first-green) gate row come first, then stable oracle-backed
-# queries, and finally entries whose evidence already exists elsewhere
-# (rows-only demos pinned by pytest, long-stable double-green rows).
-GATE_PRIORITY: tuple[str, ...] = (
-    # r19 rotation (executes the hard commitment recorded here at r18 and
-    # in COVERAGE.md): the 50 queries last checked green at r17 parked in
-    # GATE_DEFERRED through r18 and hit the 2-round staleness limit this
-    # round — the entire list rotates back into the snapshot window.  At
-    # its head sit the two r18 registrations taking their FIRST driver
-    # gate rows: `preference_pairs` (X38) and `best_of_n_examples` (X39),
-    # both SQL-twin-verified green at registration (sf0.001 + sf0.01 via
-    # test_oracle_parity and the /verify gate replica) and pinned
-    # meanwhile by independent pure-Python twins + planted-argmax tests
-    # (test_instruct.py) plus plan pins (test_plans.py).  This window
-    # also delivers the post-change driver rows the r18 verdict required
-    # for the optimization rewrites: shard_admission_index,
-    # quality_ensemble, near_dup_clusters, minhash_est_calibration
-    # (gated carrier of the retired minhash_lsh_candidates +
-    # ngram_jaccard_near_dups evidence) and duplicated_span_stats
-    # (carrier of cross_doc_gram_overlap), plus simhash_near_dups and
-    # dsir_select ahead of their r19 optimization work.
-    "preference_pairs",
-    "best_of_n_examples",
-    "shard_admission_index",
-    "span_corruption_examples",
-    "fim_examples",
-    "quality_ensemble",
-    "memorization_profile",
-    "domain_mix_report",
-    "xlingual_align",
-    "curriculum_packed_order",
-    "trigram_backoff_quality",
-    "hard_negative_mining",
-    "perplexity_buckets",
-    "dsir_select",
-    "bloom_dedup_filter",
-    "kmeans_refine_step",
-    "corpus_snapshot_diff",
-    "temperature_mixture",
-    "bm25_ranking",
-    "shipping_lead_time",
-    "top3_parts_per_brand",
-    "cumulative_monthly_volume",
-    "daily_price_delta",
-    "indexed_commodity_groups",
-    "union_day_slices",
-    "link_text_filter",
-    "commodity_lookup",
-    "brands_never_shipped_1998",
-    "boilerplate_grams",
-    "label_centroids",
-    "top5_commodities",
-    "revenue_by_region",
-    "pii_scrub",
-    "doc_fingerprints",
-    "near_dup_clusters",
-    "simhash_near_dups",
-    "ivfpq_topk_adc",
-    "quality_funnel",
-    "multimodal_features",
-    "video_frame_sample",
-    "source_language_mix",
-    "semdedup_drop",
-    "minhash_est_calibration",
-    "ann_recall_eval",
-    "ivf_recall_eval",
-    "dedup_rate_by_source",
-    "token_count_histogram",
-    "embedding_norm_outliers",
-    "image_near_dups",
-    "duplicated_span_stats",
-)
-
-# The queries checked green at r18 park outside the snapshot window
-# this round; they hit the 2-round staleness limit at r20, so the r20
-# rotation MUST move this entire list into GATE_PRIORITY (and park the
-# r19-green window here).  With 100 exported queries and a 50-row
-# snapshot the cycle is exactly two rounds — sustainable indefinitely.
-# Queries newly registered at r20 would join the head of this window
-# (the decontam_holdout_split / instruction_pairs precedent): SQL twins
-# verified green at registration time, first driver gate rows the
-# following round.
-GATE_DEFERRED: tuple[str, ...] = (
-    "decontam_holdout_split",
-    "instruction_pairs",
-    "hybrid_rrf_retrieval",
-    "shard_admission_report",
-    "temporal_split_events",
-    "longest_dup_substring",
-    "tokenizer_fertility",
-    "unigram_lm_pieces",
-    "weighted_reservoir_sample",
-    "bipartite_pagerank",
-    "tfidf_doc_pairs",
-    "record_linkage",
-    "rp_recall_eval",
-    "series_topk_similar",
-    "bpe_corpus_stats",
-    "sketch_profile_check",
-    "paragraph_dup_stats",
-    "bigram_merge_candidates",
-    "curation_pipeline",
-    "embedding_near_dups",
-    "zipf_profile",
-    "sliding_hourly_avg",
-    "clicks_recent_purchase",
-    "asof_last_purchase",
-    "range_join_value_bands",
-    "scalar_date_scan",
-    "customers_without_orders",
-    "pricing_summary",
-    "priority_counts",
-    "count_data_rows",
-    "container_classification",
-    "completed_link_types",
-    "fully_covered_orders",
-    "sanitize_commodity_names",
-    "lineage_projection",
-    "parts_above_brand_avg",
-    "events_json_extract",
-    "events_daily_by_type",
-    "user_sessionization",
-    "tfidf_top_terms",
-    "text_quality",
-    "html_table_scan",
-    "stratified_sample_by_lang",
-    "repetition_scores",
-    "doc_chunks",
-    "training_order",
-    "bigram_logprob_quality",
-    "pivot_status_qty",
-    "cube_revenue",
-    "quantity_percentiles",
-)
-
-# Retired from the GATE EXPORT only (r8, on the r7 verdict's advice): each
-# is a demo-duplicate of a sibling that carries the same SURVEY §2
-# operator's oracle evidence, and keeping all four would stretch the
-# rotation cycle to 3 rounds.  They stay REGISTERED — `list`, bench, and
-# the pytest suite still exercise them — but no longer consume snapshot
-# slots.  Coverage continuity: html_table_scan_datasource ≡ S1
-# (html_table_scan), dedup_survivors ≡ X10 (curation_pipeline),
-# token_counts ≡ X7 (token_count_histogram), dup_paragraph_docs ≡ X8
-# (paragraph_dup_stats, collapse_repeated_paras).
-GATE_RETIRED: tuple[str, ...] = (
-    "html_table_scan_datasource",
-    "dedup_survivors",
-    "token_counts",
-    "dup_paragraph_docs",
-    # r8, swapped for ivfpq_topk_adc: the norms projection is a strict
-    # subset of embedding_norm_outliers' (same exact micro-unit L1/L2
-    # arithmetic feeds its z-scores), which stays oracle-gated.
-    "embedding_norms",
-    # r9, swapped for the three new families (bloom/kmeans-refine/diff):
-    # cosine_topk_bruteforce is re-verified INSIDE ann_recall_eval and
-    # ivf_recall_eval every cycle (the brute-force pipeline is their
-    # ground-truth CTE); dedup_exact_groups' X1 evidence continues via
-    # dedup_content_hash + dedup_rate_by_source (same hash-groupBy path);
-    # doc_length_histogram is the same integer-log2 bucket construction
-    # as token_count_histogram, which stays gated.
-    "cosine_topk_bruteforce",
-    "dedup_exact_groups",
-    "doc_length_histogram",
-    # r9, swapped for quality_classifier_scores: minhash_lsh_candidates'
-    # banded signature join runs VERBATIM inside minhash_est_calibration
-    # (which persists the candidate pairs and differentials the MinHash
-    # estimate against exact Jaccard on them every cycle), so X2's LSH
-    # evidence continues oracle-gated through the calibration query.
-    "minhash_lsh_candidates",
-    # r9, swapped for bm25_ranking + temperature_mixture: both retired
-    # queries are strict sub-constructions of pipelines that stay gated —
-    # per_doc_term_counts is the per-(doc,term) tf aggregate that forms
-    # the first stage of bm25_ranking AND tfidf_top_terms;
-    # term_frequencies is the corpus-level explode+count whose shape is
-    # exercised by token_count_histogram, bigram_merge_candidates, and
-    # bm25_ranking's df stage (all oracle-gated).
-    "per_doc_term_counts",
-    "term_frequencies",
-    # r9, swapped for bigram_logprob_quality (deferred slot): every
-    # grouping set ROLLUP(a, b) produces is a strict subset of CUBE(a,
-    # b)'s, and cube_revenue stays oracle-gated over the same
-    # revenue-measure arithmetic; pivot_status_qty keeps the third
-    # GROUPING SETS shape gated.
-    "rollup_revenue",
-    # r10, swapped for bipartite_pagerank + tfidf_doc_pairs:
-    # lsh_topk_ann's bucket/top-k pipeline runs VERBATIM inside
-    # ann_recall_eval (ann_recall calls lsh_topk as its approximate side
-    # and differentials it against brute force every cycle), so X3's LSH
-    # serving evidence continues oracle-gated; repeat_vs_lapsed_custs'
-    # EXCEPT evidence continues via brands_never_shipped_1998 (same
-    # subtract path) and its intersect branch stays differential-tested
-    # by the pytest oracle-parity suite, which exercises ALL registered
-    # queries including retired ones.
-    "lsh_topk_ann",
-    "repeat_vs_lapsed_custs",
-    # r10, swapped for record_linkage + rp_recall_eval: centroid_assign
-    # runs VERBATIM inside semdedup_drop (semantic_dedup persists
-    # centroid_assign's (vec_id, pred_label) as its cluster table — the
-    # oracle differentials that assignment every cycle) and inside
-    # label_centroids/kmeans_refine_step's prototype math, all of which
-    # stay gated; ivf_topk_ann's full pipeline is nested as the approx
-    # CTE of ivf_recall_eval (same precedent as the r10 lsh_topk_ann
-    # retirement).  Both remain registered and oracle-parity-tested.
-    "centroid_assign",
-    "ivf_topk_ann",
-    # r10, swapped for dsir_select (X20): source_mix's per-source
-    # doc/token-share aggregate is the literal FIRST STAGE of the gated
-    # temperature_mixture (operators/mixing.temperature_mixture calls
-    # source_mix() and reweights its token_share column — the oracle
-    # differentials the whole composition every cycle); pack_efficiency
-    # is the aggregate companion of the gated pack_plan over the same
-    # token counts and shares its shard-hash construction with the gated
-    # training_order.  Both remain registered + oracle-parity-tested.
-    "source_mix",
-    "pack_efficiency",
-    # r11, swapped for trigram_backoff_quality + perplexity_buckets:
-    # unigram_logprob_quality's ENTIRE pipeline is the first stage of the
-    # gated perplexity_buckets (operators/text.perplexity_buckets calls
-    # unigram_logprob() and buckets its scores — the oracle differentials
-    # the whole composition every cycle); language_id's argmax projection
-    # runs VERBATIM inside the gated source_language_mix
-    # (text.source_language_mix joins language_id()'s predictions to the
-    # source column — same containment precedent).  Both remain
-    # registered, benched, and oracle-parity-tested.
-    "unigram_logprob_quality",
-    "language_id",
-    # r11, swapped for hard_negative_mining + weighted_reservoir_sample:
-    # gopher_rules() runs VERBATIM as the first stage of the gated
-    # curation_pipeline (mixing.curation_pipeline filters on its `keep`
-    # flag — the composite of all four rule flags — and the oracle
-    # differentials the whole funnel every cycle); dedup_content_hash's
-    # normalized-sha256 hash-groupBy construction is inlined identically
-    # in the gated dedup_rate_by_source (same normalization expression,
-    # same min-id keeps, plus the per-source rollup).  Both remain
-    # registered, benched, and oracle-parity-tested.
-    "gopher_quality_rules",
-    "dedup_content_hash",
-    # r11, swapped for unigram_lm_pieces (X24): validate_documents is a
-    # demo of the conditional-count aggregate shape (A2/A4 —
-    # count(when(...)) over one scan) whose oracle evidence continues
-    # through three gated queries built on the identical construction:
-    # quality_funnel (cumulative count_if funnel over the same documents
-    # table), priority_counts, and count_data_rows.  Remains registered,
-    # benched, and oracle-parity-tested.
-    "validate_documents",
-    # r12, swapped for xlingual_align (X25) + curriculum_packed_order
-    # (X26); both retirements cite r11-green rows per the retire-on-green
-    # guard.  approx_profile is the rows-only sketch demo (no oracle BY
-    # DESIGN — its r11 row is the expected no_oracle state); X6's actual
-    # oracle evidence is sketch_profile_check (the exact-twin
-    # differential), which sits in the r12 snapshot window and re-checks
-    # this round, and every sketch stays pytest-pinned (test_sketches.py)
-    # and benched.  salted_qty_by_flag's measures are the identical
-    # exact_sum arithmetic as the gated pricing_summary over the same
-    # lineitem grain (the salting is a two-phase re-aggregation of the
-    # same values — the r12 window re-checks pricing_summary); the
-    # salted plan SHAPE (partial salt-key combine, no skewed single
-    # reducer) stays pinned in test_plans.py.  Both remain registered,
-    # benched, and oracle-parity-tested.
-    "approx_profile",
-    "salted_qty_by_flag",
-    # r13, swapped for longest_dup_substring + tokenizer_fertility (the
-    # registry stays at 100 exported / 50-slot windows — the 2-round
-    # rotation holds): pq_topk_adc's PQ evidence continues oracle-gated
-    # through ivfpq_topk_adc, whose serve computes the SAME
-    # _pq_codes_expr encoding, _adc_table_expr query tables, and
-    # _adc_pair_dist m-lookup arithmetic (similarity.py) over the probed
-    # cells — exhaustive-ADC was the eval scaffold, IVF-PQ is the
-    # production composition; pack_plan's packing-cumsum evidence
-    # continues through curriculum_packed_order, which computes the
-    # IDENTICAL start_bin/start_offset window arithmetic
-    # (chunking.py pack_sequences ≡ the cumsum inside
-    # curriculum_pack_order) plus the ordering discipline, and the
-    # (lang, shard) strata shape stays pytest+scale-probed.
-    "pq_topk_adc",
-    "pack_plan",
-    # r14, swapped for memorization_profile + domain_mix_report (the
-    # registry stays at 100 exported / 50-slot windows — the 2-round
-    # rotation holds); both retirements cite r13-green rows per the
-    # retire-on-green guard.  ngram_jaccard_near_dups' end-to-end answer
-    # (near-dup pairs at exact n-gram Jaccard ≥ 0.7) stays oracle-gated
-    # VERBATIM through jaccard_ssjoin_near_dups — the two queries share
-    # the IDENTICAL oracle string (_JACCARD_07_SQL) and threshold, so the
-    # gate keeps checking the same expected rows every cycle — while its
-    # LSH candidate stage (lsh_candidate_pairs) and exact-Jaccard verify
-    # stage (exact_jaccard_pairs) both run inside the gated
-    # minhash_est_calibration, which persists the banded candidate pairs
-    # and differentials the MinHash estimate against exact string-shingle
-    # Jaccard on them (the accepted carrier of the r9
-    # minhash_lsh_candidates retirement).  cross_doc_gram_overlap's
-    # 8-gram explode and cross-doc duplicated-gram detection are the
-    # literal first two stages of the gated duplicated_span_stats (same
-    # hashed-8-gram occurrence table, same COUNT(DISTINCT doc) >= 2
-    # duplicated-gram set — span_stats adds the positional islands on
-    # top), and the same gram machinery now also feeds the gated
-    # memorization_profile and longest_dup_substring.  Both remain
-    # registered, benched, and oracle-parity-tested.
-    "ngram_jaccard_near_dups",
-    "cross_doc_gram_overlap",
-    # r15, swapped for hybrid_rrf_retrieval + shard_admission_report
-    # (retire-on-green: both r14 rows triple-green).
-    # collapse_repeated_paras' paragraph construction (_para_array over
-    # the shared tokenization) is the literal first stage of the gated
-    # paragraph_dup_stats (dedup.paragraph_table builds on the same
-    # _para_array — the oracle differentials that construction every
-    # cycle); its order-preserving prefix-filter projection stays pinned
-    # by pytest and the oracle-parity suite.  top_part_per_brand_maxby's
-    # per-brand argmax is the k=1 case of the gated
-    # top3_parts_per_brand's rank window (same grouping, same ordering,
-    # same tie-break), and its grouped-measure shape continues through
-    # the five gated Ext-A6 siblings (pricing_summary, cube_revenue,
-    # pivot_status_qty, quantity_percentiles, shipping_lead_time).
-    # Both remain registered, benched, and oracle-parity-tested.
-    "collapse_repeated_paras",
-    "top_part_per_brand_maxby",
-    # r15, swapped for temporal_split_events (retire-on-green: r14 row
-    # triple-green).  lexical_diversity is a pure tokens-projection —
-    # the same array-op construction the gated text_quality computes its
-    # per-doc token statistics with and the gated repetition_scores'
-    # plan class (projection-only, pinned) — and X7's corpus-statistics
-    # evidence continues via four gated carriers (token_count_histogram,
-    # bigram_merge_candidates, zipf_profile, bigram_logprob_quality).
-    # Remains registered, benched, and oracle-parity-tested.
-    "lexical_diversity",
-    # r16, swapped for shard_admission_index (retire-on-green: r15 row
-    # triple-green).  jaccard_ssjoin_near_dups is the exact
-    # set-similarity join — the deterministic baseline the LSH pipeline
-    # is measured against — and that exact-verification evidence runs
-    # inside the gated minhash_est_calibration EVERY cycle (it
-    # differentials the MinHash estimate against exact string-shingle
-    # Jaccard on the persisted banded pairs — the accepted carrier of
-    # the r9 minhash_lsh_candidates retirement), while the shingle
-    # inverted-index candidate machinery is the identical banded
-    # equi-join now gated twice over in shard_admission_report and
-    # shard_admission_index; the exact all-pairs SQL twin also remains
-    # benched as the r14-retired ngram_jaccard_near_dups.  Remains
-    # registered, benched, and oracle-parity-tested.
-    "jaccard_ssjoin_near_dups",
-    # r16, swapped for span_corruption_examples + fim_examples
-    # (retire-on-green: both r15 rows triple-green).
-    # mixture_budget_fill's hash-ordered greedy fill consumes the same
-    # importance-weight machinery as the gated dsir_select, and the
-    # mixing family keeps THREE gated oracle carriers (dsir_select,
-    # temperature_mixture, domain_mix_report); the exact integer fill
-    # arithmetic stays pinned by an independent pure-Python twin
-    # (test_mixing_decontam.test_budget_fill_matches_python_twin) plus
-    # the determinism/clamp tests.  grouped_pandas_price_stats is the
-    # grouped-applyInPandas Arrow demo: the Arrow/pandas boundary keeps
-    # four gated carriers (multimodal_features + video_frame_sample via
-    # mapInPandas, bpe_corpus_stats + unigram_lm_pieces via the
-    # Arrow-batched encode) and the grouped shape itself stays
-    # plan-pinned in test_plans.py and exercised by the stateful
-    # streaming + jobs suites.  Both remain registered, benched, and
-    # oracle-parity-tested.
-    "mixture_budget_fill",
-    "grouped_pandas_price_stats",
-    # r16, swapped for quality_ensemble (retire-on-green: r15 row
-    # triple-green).  revenue_rank_tiers' rank window is the same
-    # bounded_window construction as the gated top3_parts_per_brand
-    # (identical partitioning and tie-break discipline; rank vs
-    # row_number is the only delta) and its tier CASE is a pure
-    # post-window projection; §2.8's window evidence keeps three gated
-    # carriers (top3_parts_per_brand, cumulative_monthly_volume,
-    # daily_price_delta) plus the rank-over-histogram start_rank
-    # windows gated inside perplexity_buckets and quality_ensemble.
-    # Remains registered, benched, and oracle-parity-tested.
-    "revenue_rank_tiers",
-    # r17, swapped for decontam_holdout_split (X36, retire-on-green:
-    # r16 row triple-green).  benchmark_decontam's ENTIRE overlap
-    # machinery — the string-shingle explode, the distinct reference
-    # gram table, the equi-join on g — is the factored
-    # decontam.gram_hits, which the gated decontam_holdout_split runs
-    # VERBATIM every cycle (reference-side grouping instead of
-    # corpus-side is the only delta; the oracle differentials the whole
-    # construction at every gate round), and the gram machinery keeps a
-    # second gated carrier in memorization_profile (the positional
-    # variant over the same gram_hash_array convention).  Remains
-    # registered, benched, and oracle-parity-tested.
-    "benchmark_decontam",
-    # r17, swapped for instruction_pairs (X37, retire-on-green: r16 row
-    # triple-green).  split_leakage is the exact-content leak DETECTOR:
-    # a normalized-md5 content-hash groupBy whose construction class
-    # stays oracle-gated through dedup_rate_by_source (the identical
-    # normalize -> hash -> groupBy -> cross-source rollup shape, sha256
-    # flavor) and doc_fingerprints (the gated hash-projection carrier),
-    # while the LEAKAGE discipline itself is now gated at strictly
-    # stronger grain by decontam_holdout_split (gram-level
-    # cross-split contamination, not just byte-identical text).
-    # Remains registered, benched, and oracle-parity-tested.
-    "split_leakage",
-    # r18, swapped for preference_pairs (X38, retire-on-green: r17 row
-    # triple-green).  quality_classifier_scores' ENTIRE pipeline — the
-    # relational featurization, the one exact distributed LR gradient
-    # step in int64 micro-units, and the integer-dot-product sign test —
-    # is expressed as the shared _LR_FEATS/_LR_SCORE_CTES/_LR_DOT
-    # constants, which the gated quality_ensemble nests VERBATIM as its
-    # clf vote (the sharing was built at r16 precisely so the
-    # classifier's SQL twin cannot drift from the ensemble's) and which
-    # the newly-registered preference_pairs oracle nests the same way —
-    # so the featurize -> train-step -> score construction keeps TWO
-    # gated oracle carriers differentialing it every cycle.  Multi-step
-    # driver training (fit_lr), literal-weight serving, and the CLI
-    # quality-fit path stay pytest-pinned (test_classifier.py,
-    # test_cli.py).  Remains registered, benched, and
-    # oracle-parity-tested.
-    "quality_classifier_scores",
-    # r18, swapped for best_of_n_examples (X39, retire-on-green: r17
-    # row triple-green).  uniform_hash_sample is the pure
-    # salted-hash-threshold sample demo (one filter projection), and
-    # the deterministic hash-threshold SELECTION discipline it
-    # demonstrates — a salted portable hash compared against a fixed
-    # ppm threshold, NULL keys never selected — is now gated at
-    # strictly richer grain through decontam_holdout_split, whose
-    # hash-mode candidacy applies the identical construction class
-    # (pmod(portable_token_hash('holdout:'||id), 1e6) < ppm, the same
-    # engine-portable md5 machinery, differentialed by the oracle
-    # every cycle) and through its streaming serve (stream_holdout_tag
-    # computes the same candidacy in-plan).  The sampling family keeps
-    # two further gated carriers in weighted_reservoir_sample
-    # (deterministic seeded selection over the same documents grain)
-    # and stratified_sample_by_lang (deterministic content-hash-ranked
-    # quota).  Remains registered, benched, and oracle-parity-tested.
-    "uniform_hash_sample",
-)
-
-
-# Retirement ledger: name -> (round retired from the gate export, latest
-# round with a green driver gate row at retirement time).  The r11 verdict
-# ("What's wrong #3") asked that retirement discipline be retire-on-green:
-# a query retired at round N must have been green at N or N-1, so the
-# carrier-containment argument is made against fresh evidence, not stale
-# rows.  `_check_gate_lists` enforces that rule for every retirement from
-# r12 onward; pre-r12 entries are recorded faithfully (several were
-# retired on older evidence — the judge reviewed and accepted each
-# carrier rationale, so they are grandfathered, not rewritten).
-_RETIRE_ON_GREEN_SINCE = 12
-GATE_RETIREMENT_LEDGER: dict[str, tuple[int, int]] = {
-    "html_table_scan_datasource": (8, 6),
-    "dedup_survivors": (8, 6),
-    "token_counts": (8, 6),
-    "dup_paragraph_docs": (8, 6),
-    "embedding_norms": (8, 7),
-    "cosine_topk_bruteforce": (9, 7),
-    "dedup_exact_groups": (9, 7),
-    "doc_length_histogram": (9, 7),
-    "minhash_lsh_candidates": (9, 7),
-    "per_doc_term_counts": (9, 7),
-    "term_frequencies": (9, 7),
-    "rollup_revenue": (9, 6),
-    "lsh_topk_ann": (10, 6),
-    "repeat_vs_lapsed_custs": (10, 6),
-    "centroid_assign": (10, 6),
-    "ivf_topk_ann": (10, 6),
-    "source_mix": (10, 9),
-    "pack_efficiency": (10, 9),
-    "unigram_logprob_quality": (11, 10),
-    "language_id": (11, 10),
-    "gopher_quality_rules": (11, 9),
-    "dedup_content_hash": (11, 9),
-    "validate_documents": (11, 9),
-    "approx_profile": (12, 11),
-    "salted_qty_by_flag": (12, 11),
-    "pq_topk_adc": (13, 12),
-    "pack_plan": (13, 12),
-    "ngram_jaccard_near_dups": (14, 13),
-    "cross_doc_gram_overlap": (14, 13),
-    "collapse_repeated_paras": (15, 14),
-    "top_part_per_brand_maxby": (15, 14),
-    "lexical_diversity": (15, 14),
-    "jaccard_ssjoin_near_dups": (16, 15),
-    "mixture_budget_fill": (16, 15),
-    "grouped_pandas_price_stats": (16, 15),
-    "revenue_rank_tiers": (16, 15),
-    "benchmark_decontam": (17, 16),
-    "split_leakage": (17, 16),
-    "quality_classifier_scores": (18, 17),
-    "uniform_hash_sample": (18, 17),
-}
-
-
-def _check_gate_lists() -> None:
-    """Import-time structural guard (r6 review): the gate lists (plus the
-    retired list) must PARTITION the registry exactly.  A typo'd or
-    forgotten name would otherwise silently drop a query from the export
-    order and it would never get a correctness row (this bit round 5)."""
-    prio, deferred = set(GATE_PRIORITY), set(GATE_DEFERRED)
-    retired, reg = set(GATE_RETIRED), set(REGISTRY)
-    for a, b, la, lb in (
-        (prio, deferred, "GATE_PRIORITY", "GATE_DEFERRED"),
-        (prio, retired, "GATE_PRIORITY", "GATE_RETIRED"),
-        (deferred, retired, "GATE_DEFERRED", "GATE_RETIRED"),
-    ):
-        overlap = a & b
-        if overlap:
-            raise KeyError(f"queries in both {la} and {lb}: {sorted(overlap)}")
-    unknown = (prio | deferred | retired) - reg
-    if unknown:
-        raise KeyError(f"gate window names missing from REGISTRY: {sorted(unknown)}")
-    unlisted = reg - prio - deferred - retired
-    if unlisted:
-        raise KeyError(
-            f"registered queries missing from the gate lists: {sorted(unlisted)}"
-        )
-    # Retire-on-green (r11 verdict #3): every retired query must appear in
-    # the ledger, and any retirement from r12 onward must cite a green gate
-    # row from the retirement round or the round before it.
-    unledgered = retired - set(GATE_RETIREMENT_LEDGER)
-    if unledgered:
-        raise KeyError(
-            f"GATE_RETIRED entries missing from GATE_RETIREMENT_LEDGER: "
-            f"{sorted(unledgered)}"
-        )
-    phantom = set(GATE_RETIREMENT_LEDGER) - retired
-    if phantom:
-        raise KeyError(
-            f"GATE_RETIREMENT_LEDGER entries not in GATE_RETIRED: {sorted(phantom)}"
-        )
-    for name, (retired_round, last_green) in GATE_RETIREMENT_LEDGER.items():
-        if retired_round >= _RETIRE_ON_GREEN_SINCE and last_green < retired_round - 1:
-            raise ValueError(
-                f"stale retirement: {name!r} retired at r{retired_round} with "
-                f"latest green row r{last_green}; retire-on-green requires "
-                f"r{retired_round - 1} or newer"
-            )
-
-
-def _gate_order() -> list[str]:
-    _check_gate_lists()
-    return list(GATE_PRIORITY) + list(GATE_DEFERRED)
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: REGISTRY[name].fn for name in _gate_order()}
-
-
-def oracle_sql() -> dict[str, str]:
-    return {
-        name: REGISTRY[name].oracle_text()
-        for name in _gate_order()
-        if REGISTRY[name].oracle
-    }
-
-
-# Run the structural guard at import time so a bad edit fails the very
-# first `import queries`, not the first gate export.
-_check_gate_lists()

@@ -507,6 +507,35 @@ def test_simhash_drops_tokenless_docs(spark):
     assert simhash_near_duplicates(docs, portable=True).count() == 0
 
 
+def test_simhash_fold_matches_python_twin_with_empty_rows(spark):
+    """The Arrow SimHash fold equals a per-bit majority twin, including
+    empty hash arrays mid-batch and at the batch end, which fold to 0
+    instead of borrowing a neighbour's bits."""
+    def twin(hs):
+        sig = 0
+        for i in range(64):
+            if 2 * sum((h >> i) & 1 for h in hs) > len(hs):
+                sig |= 1 << i
+        return sig - (1 << 64) if sig >= 1 << 63 else sig
+
+    rows = [
+        (0, [3, -1, 7]),
+        (1, []),
+        (2, [1 << 62, -(1 << 63), 12345, 12345]),
+        (3, []),
+        (4, [-5]),
+        (5, []),
+    ]
+    df = spark.createDataFrame(rows, "id long, hs array<long>").coalesce(1)
+    got = {
+        r["id"]: r["sh"]
+        for r in df.select(
+            "id", D._simhash_from_hash_arrays()(F.col("hs")).alias("sh")
+        ).collect()
+    }
+    assert got == {i: twin(hs) for i, hs in rows}
+
+
 def test_semantic_dedup_drops_planted_cluster_dups(spark):
     # two orthogonal clusters; vectors 1/2 are near-identical (cos ~ 1)
     # inside cluster A, vector 10 is A-ish but not a dup, 20/21 are

@@ -299,10 +299,9 @@ def test_preference_pairs_validation(spark):
 
 
 def test_preference_pairs_staged_oracle(spark):
-    """The STAGED r18-registration oracle (queries.preference_pairs_oracle
-    — nests the X35 voter CTEs verbatim) stays bit-exact against the
-    operator through the full driver-gate compare, so the r18 rotation
-    can register it as a pure list edit."""
+    """The preference_pairs oracle (queries.preference_pairs_oracle —
+    nests the X35 voter CTEs verbatim) stays bit-exact against the
+    operator through the full driver-gate compare."""
     from market_data_ingestion_scraper_spark.queries import (
         preference_pairs_oracle,
     )

@@ -164,6 +164,53 @@ def test_run_corpus_ingestion_incremental_appends_only_new(spark, tmp_path):
     assert spark.read.parquet(gold).count() == 3
 
 
+def test_run_corpus_ingestion_writes_one_row_per_kept_hash(spark, tmp_path):
+    """A landing that delivers the same document twice (identical lines
+    in two shards, plus a case variant under the same doc_id) writes ONE
+    gold row per kept content hash, in full and incremental bloom mode:
+    gold row count == the returned n_kept."""
+    from market_data_ingestion_scraper_spark.jobs import run_corpus_ingestion
+
+    def doc(i, text, src="a"):
+        return {"doc_id": i, "text": text, "lang": "en", "source": src,
+                "n_chars": len(text)}
+
+    def land(dirname, shards):
+        d = tmp_path / dirname
+        d.mkdir()
+        for n, rows in enumerate(shards):
+            with open(d / f"s{n}.jsonl", "w") as f:
+                for r in rows:
+                    f.write(json.dumps(r) + "\n")
+        return str(d)
+
+    gold = str(tmp_path / "gold")
+    bloom = str(tmp_path / "bloom")
+    l1 = land("b1", [
+        [doc(1, "hello world"), doc(3, "other text")],
+        [doc(1, "hello world"), doc(1, "Hello  World")],
+    ])
+    m1 = run_corpus_ingestion(spark, l1, gold, incremental=True,
+                              bloom_path=bloom)
+    back = spark.read.parquet(gold).collect()
+    assert m1["n_kept"] == len(back) == 2
+    # the lowest doc_id wins, ties broken by the whole row
+    assert {r["doc_id"]: r["text"] for r in back} == {
+        1: "Hello  World", 3: "other text",
+    }
+
+    l2 = land("b2", [[doc(7, "fresh doc"), doc(1, "hello world")],
+                     [doc(7, "fresh doc")]])
+    m2 = run_corpus_ingestion(spark, l2, gold, incremental=True,
+                              bloom_path=bloom)
+    assert m2["n_kept"] == 1 and m2["n_seen_before"] == 1
+    assert spark.read.parquet(gold).count() == m1["n_kept"] + m2["n_kept"]
+
+    m3 = run_corpus_ingestion(spark, l2, str(tmp_path / "gold_full"))
+    assert spark.read.parquet(str(tmp_path / "gold_full")).count() \
+        == m3["n_kept"] == 2
+
+
 def test_stream_corpus_to_gold_cross_batch_dedup(spark, tmp_path):
     """Continuous-crawl ingestion: the streaming path must maintain the
     same content-deduplicated gold as the incremental batch job —

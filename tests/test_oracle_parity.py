@@ -8,6 +8,7 @@ to run at the driver's correctness scale.
 from __future__ import annotations
 
 import os
+from unittest import mock
 
 import pytest
 
@@ -61,55 +62,74 @@ def test_entry_smoke(spark):
 
 
 def test_gate_window_ordering():
-    """The external gate snapshots only the first 50 queries() entries —
-    pin that every query still needing a first/fresh correctness row is
-    inside that window and the export covers the registry exactly once."""
-    from market_data_ingestion_scraper_spark.queries import (
-        GATE_DEFERRED,
-        GATE_PRIORITY,
-        GATE_RETIRED,
-        oracle_sql,
-        queries,
-    )
+    """The external gate snapshots only the first 50 ``queries()``
+    entries, so the export puts the stalest green row first and covers
+    the registry exactly once together with the retired queries."""
+    import __spark_entry__ as e
 
-    names = list(queries())
-    assert sorted(names + list(GATE_RETIRED)) == sorted(
-        REGISTRY
-    ), "export + retired must cover REGISTRY"
-    assert not set(GATE_RETIRED) & set(names), "retired queries must not export"
-    window = set(names[:50])
-    missing = set(GATE_PRIORITY) - window
-    assert not missing, f"priority queries outside gate window: {missing}"
-    assert set(GATE_PRIORITY) & set(GATE_DEFERRED) == set()
-    # two-round rotation invariant: window is exactly the priority list
-    # and the parked list fills the next round's window exactly
-    assert len(GATE_PRIORITY) == 50 and len(GATE_DEFERRED) == 50
-    assert set(oracle_sql()) <= set(names)
+    names = list(e.queries())
+    retired = [n for n, spec in REGISTRY.items() if spec.retired is not None]
+    assert sorted(names + retired) == sorted(REGISTRY), (
+        "export + retired must cover REGISTRY exactly once"
+    )
+    assert not set(retired) & set(names), "retired queries must not export"
+    osql = list(e.oracle_sql())
+    assert set(osql) <= set(names)
+    assert osql == [n for n in names if n in osql], "oracle_sql keeps export order"
+    last = e.last_green(e.correctness_records())
+    rounds = [last.get(n, -1) for n in names]
+    assert rounds == sorted(rounds), "stalest green row first"
+
+    # with no records the order is registration order
+    with mock.patch.object(e, "correctness_records", return_value={}):
+        assert list(e.queries()) == [n for n in REGISTRY if n not in retired]
+
+
+def test_gate_window_rotates_on_newer_record():
+    """A newer record in which the current window is all green sends
+    those 50 queries to the back, so the next window is the other 50."""
+    import __spark_entry__ as e
+
+    records = e.correctness_records()
+    before = list(e.queries())
+    green = {"rows_match": True, "schema_match": True, "hash_match": True,
+             "spark_rows": 1, "oracle_rows": 1, "err": None}
+    newer = {**records, max(records) + 1: {n: green for n in before[:50]}}
+    with mock.patch.object(e, "correctness_records", return_value=newer):
+        after = list(e.queries())
+    assert set(after[:50]) == set(before[50:100])
+    assert set(after[50:100]) == set(before[:50])
+
+
+def _stale_retirements(e, records: dict) -> list[str]:
+    """Queries retired at round N >= 12 whose latest green row in
+    ``records`` up to N is older than N - 1."""
+    stale = []
+    for name, spec in REGISTRY.items():
+        n = spec.retired
+        if n is not None and n >= 12:
+            upto = {r: rows for r, rows in records.items() if r <= n}
+            if e.last_green(upto).get(name, -1) < n - 1:
+                stale.append(name)
+    return stale
 
 
 def test_retire_on_green_guard():
-    """r11 verdict #3: a query retired at round N must cite a green gate
-    row from N or N-1 (enforced from r12 onward).  The import-time guard
-    must fail fast on a stale future retirement and pass on the current
-    ledger."""
-    from unittest import mock
+    """Retire-on-green: a query retired at round N >= 12 must have a
+    green gate row from N or N-1 in the committed records.  The check
+    passes on the records and flags a planted stale retirement."""
+    import __spark_entry__ as e
 
-    from market_data_ingestion_scraper_spark import queries as q
+    records = e.correctness_records()
+    assert _stale_retirements(e, records) == []
 
-    # every retired query is ledgered, no phantoms, and the guard passes
-    assert set(q.GATE_RETIREMENT_LEDGER) == set(q.GATE_RETIRED)
-    q._check_gate_lists()
+    # rows-only check of an oracle-less query counts as green
+    assert REGISTRY["approx_profile"].retired == 12
+    assert records[11]["approx_profile"]["err"] == "no_oracle"
+    assert e.last_green({11: records[11]})["approx_profile"] == 11
 
-    # a hypothetical r12+ retirement with r10-vintage evidence must raise
-    name = q.GATE_RETIRED[0]
-    stale = dict(q.GATE_RETIREMENT_LEDGER)
-    stale[name] = (12, 10)
-    with mock.patch.object(q, "GATE_RETIREMENT_LEDGER", stale):
-        with pytest.raises(ValueError, match="stale retirement"):
-            q._check_gate_lists()
-
-    # ...while r12-retired-with-r11-green passes
-    fresh = dict(q.GATE_RETIREMENT_LEDGER)
-    fresh[name] = (12, 11)
-    with mock.patch.object(q, "GATE_RETIREMENT_LEDGER", fresh):
-        q._check_gate_lists()
+    # fail the r17 row of an r18 retirement: its latest green is r16
+    name = "uniform_hash_sample"
+    assert REGISTRY[name].retired == 18
+    planted = {**records, 17: {**records[17], name: {"err": "boom"}}}
+    assert _stale_retirements(e, planted) == [name]

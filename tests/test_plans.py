@@ -92,21 +92,15 @@ def test_minhash_table_fused_no_object_agg_no_sentinel_join(spark):
         with aqe_disabled(spark):
             txt = explain_str(minhash_table(docs, portable=portable))
         assert "ObjectHashAggregate" not in txt, txt
-        # formatted output prints each scan twice (tree + detail); the
-        # sentinel join's third corpus scan would read 6 (portable:
-        # occurrences + vocab + sentinel) / 4 (xxhash: shingles +
-        # sentinel) mentions.  Bounded with <= (r18 advisor): an exact
-        # == would break on a Spark version that adds a detail section
-        # to plan printing without any real plan regression; the
-        # sentinel-join regression this pin exists for would push the
-        # count ABOVE the bound.
+        # formatted output prints each scan twice (tree + detail), so
+        # both hash flavors' single corpus scan reads 2 mentions; a
+        # sentinel join's second scan would read 4.  Bounded with <=: an
+        # exact == would break on a Spark version that adds a detail
+        # section to plan printing without any real plan regression.
         n_scans = txt.count("Scan parquet")
-        if portable:
-            assert 1 <= n_scans <= 4, txt  # occurrences + vocab only
-        else:
-            assert 1 <= n_scans <= 2, txt  # one scan, period
-            # xxhash path: explode_outer + one groupBy, no join at all
-            assert "Join" not in txt, txt
+        assert 1 <= n_scans <= 2, txt  # one scan, period
+        # explode_outer + one groupBy, no join at all
+        assert "Join" not in txt, txt
 
 
 def test_embedding_near_dups_has_no_cartesian(spark):
